@@ -12,17 +12,24 @@ schema (S1 — no RDD normalizer), runs the full pipeline (sessionize →
 attribution → unpivot → six GA360 marts, with touchpoints recomputed
 over history ∪ today when --history is given), filters each mart to
 the job date (P5, as ``to_date(timestamp) = date`` instead of the
-reference's string ``contains``), appends today's sessions to the
-history table (S3) and writes each mart under Hive-style
+reference's string ``contains``), writes each mart under Hive-style
 ``type=X/year=Y/month=M/day=D`` (S4) so downstream reads
-partition-prune natively.
+partition-prune natively, and then appends today's sessions to the
+history table (S3).
+
+The pipeline runs once (``plans/pipeline.write_daily_job``): the
+hit-grain export and the day's sessions mart are persisted, all six
+marts are written from them, and the printed row counts are observed
+during those writes instead of counted by six more jobs. The history
+append comes after the mart writes because it refreshes every cached
+plan that reads the history path — the sessions mart among them — and
+a sessions mart recomputed over the appended history would count
+today's sessions twice.
 """
 
 from __future__ import annotations
 
 import argparse
-
-from pyspark.sql import functions as F
 
 
 def _query_main(argv: list[str]) -> None:
@@ -102,40 +109,21 @@ def main(argv: list[str] | None = None) -> None:
                    help="keep hits of every date in the outputs")
     args = p.parse_args(argv)
 
-    from .plans.pipeline import run_daily_pipeline
+    from .plans.pipeline import write_daily_job
     from .session import get_spark
-    from .sources.ga import (
-        append_session_history,
-        load_own_session_history,
-        read_enriched_hits,
-        save_daily_marts,
-    )
+    from .sources.ga import read_enriched_hits
 
     spark = (
         get_spark(master=args.master) if args.master else get_spark()
     )
-    hits = read_enriched_hits(spark, args.input)
-    history = (
-        load_own_session_history(spark, args.history)
-        if args.history
-        else None
-    )
-    marts = run_daily_pipeline(
-        hits,
-        session_history=history,
+    counts = write_daily_job(
+        read_enriched_hits(spark, args.input),
+        args.output,
+        args.date,
+        history_path=args.history,
         hot_visitor_min_hits=args.hot_visitor_min_hits,
+        day_filter=not args.no_day_filter,
     )
-    if not args.no_day_filter:
-        marts = {
-            name: df.filter(
-                F.to_date("timestamp") == F.lit(args.date).cast("date")
-            )
-            for name, df in marts.items()
-        }
-    if args.history:
-        append_session_history(marts["sessions"], args.history)
-    save_daily_marts(marts, args.output, args.date)
-    counts = {n: df.count() for n, df in marts.items()}
     print({"date": args.date, "rows": counts})
 
 

@@ -227,10 +227,13 @@ def fs_link_scores(
     # n_blocks × max_block_size² pair-rows (guide §2.5 input skew).
     # Spread the (id, block, fields) rows — never the pairs — across
     # cores first; gated so an already-parallel input skips the
-    # exchange (r14).
+    # exchange (r14). The streamed side keeps ``records``' partitioning
+    # through the broadcast join, so the gate probes ``records`` itself:
+    # probing ``a`` would make AQE run the block-count aggregation and
+    # its broadcast while planning, and again for the real action.
     sc = records.sparkSession.sparkContext
     try:
-        narrow = a.rdd.getNumPartitions() < sc.defaultParallelism
+        narrow = records.rdd.getNumPartitions() < sc.defaultParallelism
     except Exception:  # pragma: no cover - planning quirk: keep old path
         narrow = False
     if narrow:

@@ -12,6 +12,18 @@ projections; the product unpivot is an in-place explode (no join); the
 only other exchange is the touchpoint recomputation keyed on
 ``fullVisitorId``.
 
+The daily job (:func:`write_daily_job`, the CLI's one code path) runs
+that plan once. The hit-grain export is persisted and all six marts
+read it; the day-filtered sessions mart is persisted too, because it
+feeds both its own mart write and the history append. Row counts come
+from an ``Observation`` on each mart write, not from a ``count()`` per
+mart. The marts are written BEFORE the history append: the cached
+sessions plan reads the history path, and an append to that path makes
+Spark refresh the path's file index and recache every plan that reads
+it. Appended first, the sessions mart would be recomputed over a
+history that already holds today's sessions, and would count them
+twice.
+
 Scale departure (SURVEY §7.3.3): the reference re-reads and recomputes
 the entire session history every run. ``run_daily_pipeline`` keeps that
 faithful mode, but at 100 TB you'd maintain an incremental per-visitor
@@ -50,6 +62,12 @@ from ..operators.sessionize import (
     with_visit_ids,
 )
 from ..operators.unpivot import unpivot_products
+from ..sources.ga import (
+    append_session_history,
+    load_own_session_history,
+    save_daily_marts,
+)
+from ..streaming.monitoring import observe_scan_metrics
 
 DROPPED_HIT_TYPES = ["adtiming", "timing"]  # P3, main.py:1160
 
@@ -146,15 +164,12 @@ def hit_export(
     )
 
 
-def run_daily_pipeline(
-    hits: DataFrame,
-    session_history: DataFrame | None = None,
-    hot_visitor_min_hits: int | None = None,
+def daily_marts(
+    export: DataFrame, session_history: DataFrame | None = None
 ) -> dict[str, DataFrame]:
-    """The six marts (main.py:1285-1290): sessions (multichannel, with
-    touchpoints over history ∪ today), pageviews, events, products,
-    transactions, items."""
-    export = hit_export(hits, hot_visitor_min_hits)
+    """The six marts (main.py:1285-1290) over one hit-grain export:
+    sessions (multichannel, with touchpoints over history ∪ today),
+    pageviews, events, products, transactions, items."""
     today_sessions = export_sessions(export)
     if session_history is not None:
         sessions = recompute_touchpoints(session_history, today_sessions)
@@ -168,3 +183,59 @@ def run_daily_pipeline(
         "transactions": export_transactions(export),
         "items": export_items(export),
     }
+
+
+def run_daily_pipeline(
+    hits: DataFrame,
+    session_history: DataFrame | None = None,
+    hot_visitor_min_hits: int | None = None,
+) -> dict[str, DataFrame]:
+    """The six marts straight from the day's hits, as lazy plans."""
+    return daily_marts(hit_export(hits, hot_visitor_min_hits), session_history)
+
+
+def write_daily_job(
+    hits: DataFrame,
+    output: str,
+    job_date: str,
+    history_path: str | None = None,
+    hot_visitor_min_hits: int | None = None,
+    day_filter: bool = True,
+) -> dict[str, int]:
+    """EP3 ``main()``: write the six marts of ``job_date`` under
+    ``output``, then append today's sessions to ``history_path`` (read
+    first, when given). Returns the rows written per mart.
+
+    The export and the sessions mart are persisted for the duration of
+    the writes and released on every exit path; see the module
+    docstring for why the history append comes last.
+    """
+    history = (
+        load_own_session_history(hits.sparkSession, history_path)
+        if history_path
+        else None
+    )
+    export = hit_export(hits, hot_visitor_min_hits).persist()
+    sessions = None
+    try:
+        marts = daily_marts(export, history)
+        if day_filter:
+            day = F.lit(job_date).cast("date")
+            marts = {
+                name: df.filter(F.to_date("timestamp") == day)
+                for name, df in marts.items()
+            }
+        sessions = marts["sessions"] = marts["sessions"].persist()
+        observations = {}
+        for name, df in marts.items():
+            observations[name], marts[name] = observe_scan_metrics(
+                df, f"{name}_rows"
+            )
+        save_daily_marts(marts, output, job_date)
+        if history_path:
+            append_session_history(sessions, history_path)
+        return {name: obs.get["n_rows"] for name, obs in observations.items()}
+    finally:
+        if sessions is not None:
+            sessions.unpersist()
+        export.unpersist()

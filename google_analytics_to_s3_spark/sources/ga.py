@@ -20,6 +20,7 @@
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -32,6 +33,8 @@ ENVELOPE_SCHEMA = (
     "trace_id string, received_at_apig string, ip string, "
     "user_agent string, body string"
 )
+# what spark.read.parquet raises for a history table not written yet
+_NO_TABLE_YET = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
 def read_enriched_hits(
@@ -66,13 +69,18 @@ def load_own_session_history(
     None when the table doesn't exist yet (first run) so callers skip
     the history union entirely — the reference-parity S2 loader above
     stays for reading histories that actually follow session_schema.
+
+    Schema inference already fails on a missing or empty path, so no
+    probe job runs here. Any other failure — a corrupt file, say —
+    propagates: treating it as a first run would silently drop every
+    prior touchpoint.
     """
     try:
-        df = spark.read.parquet(path)
-        df.head(1)
-        return df
-    except Exception:
-        return None
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in _NO_TABLE_YET:
+            return None
+        raise
 
 
 def append_session_history(df: DataFrame, path: str) -> None:

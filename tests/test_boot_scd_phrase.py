@@ -19,6 +19,27 @@ def _plan(df, mode: str = "simple") -> str:
     )
 
 
+def _materialized_leaves(df) -> list:
+    """One identity per leaf of the optimized plan: the RDD id of a
+    checkpointed scan, the cache builder of an in-memory scan, None for
+    anything else (a file scan, a local relation)."""
+    jvm = df.sparkSession._jvm
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LogicalRDD":
+            out.append(("rdd", leaf.rdd().id()))
+        elif kind == "InMemoryRelation":
+            out.append(
+                ("cache", jvm.System.identityHashCode(leaf.cacheBuilder()))
+            )
+        else:
+            out.append(None)
+    return out
+
+
 class TestBootstrap:
     def test_ci_brackets_point_estimate(self, spark):
         df = spark.range(2000).select(
@@ -159,10 +180,15 @@ class TestIdentityPlans:
     def test_item_similarity_no_cartesian(self, spark, sf_smoke):
         from google_analytics_to_s3_spark.plans import driver_queries as dq
 
-        plan = _plan(dq.QUERIES["item_similarity"](spark, sf_smoke))
+        df = dq.QUERIES["item_similarity"](spark, sf_smoke)
+        plan = _plan(df)
         assert "CartesianProduct" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
-        # the pruned interaction set is cached once and re-read, not
-        # re-derived per consumer
-        assert "InMemoryTableScan" in plan, plan
+        # the scored pair table is materialized once and both Union
+        # branches re-read it, not re-derive the pair expansion per
+        # branch; whether it is pinned as a cache or a checkpoint
+        union = plan[plan.index("Union"):]
+        assert "Generate" not in union and "Join" not in union, plan
+        leaves = _materialized_leaves(df)
+        assert len(leaves) == 2 and len(set(leaves)) == 1, (leaves, plan)
         spark.catalog.clearCache()

@@ -1,10 +1,14 @@
 """Sink-side operators: Hive-layout daily marts (S4), session-history
 append (S3), catalog registration (S11)."""
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from google_analytics_to_s3_spark.sources.ga import (
     append_session_history,
+    load_own_session_history,
     load_session_history,
     save_daily_marts,
 )
@@ -46,6 +50,37 @@ def test_session_history_roundtrip(spark, tmp_path):
     append_session_history(df, path)
     append_session_history(df, path)
     assert load_session_history(spark, path, df.schema).count() == 2
+
+
+class TestOwnSessionHistory:
+    def test_missing_or_empty_dir_is_first_run(self, spark, tmp_path):
+        assert load_own_session_history(spark, str(tmp_path / "no")) is None
+        (tmp_path / "empty").mkdir()
+        assert load_own_session_history(spark, str(tmp_path / "empty")) is None
+
+    def test_existing_history_loads(self, spark, tmp_path):
+        path = str(tmp_path / "hist")
+        df = spark.createDataFrame([(1, "x"), (2, "y")], "id long, v string")
+        append_session_history(df, path)
+        got = load_own_session_history(spark, path)
+        assert got.schema == df.schema
+        assert sorted(got.collect()) == sorted(df.collect())
+
+    def test_corrupt_footer_raises(self, spark, tmp_path):
+        # a damaged history must stop the job, not pass for a first run
+        # that silently drops every prior touchpoint
+        path = tmp_path / "hist"
+        append_session_history(
+            spark.createDataFrame([(1, "x")], "id long, v string")
+            .coalesce(1),
+            str(path),
+        )
+        (part,) = [f for f in os.listdir(path) if f.endswith(".parquet")]
+        with open(path / part, "r+b") as fh:
+            fh.seek(-8, os.SEEK_END)
+            fh.write(b"\0" * 8)
+        with pytest.raises(Exception, match="(?i)parquet"):
+            load_own_session_history(spark, str(path))
 
 
 def test_catalog_registration(spark, tmp_path):

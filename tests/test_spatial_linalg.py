@@ -364,6 +364,31 @@ def test_fs_linkage_scores_and_purge(spark):
     assert {(r["id_a"], r["id_b"]) for r in purged} == {(4, 5)}
 
 
+def test_fs_link_scores_builds_without_jobs(spark, tmp_path):
+    # the narrow-input gate must not make AQE run the block-count
+    # aggregation and broadcast while the plan is only being built
+    from google_analytics_to_s3_spark.operators.linkage import fs_link_scores
+
+    path = str(tmp_path / "records")
+    spark.createDataFrame(
+        [(i, i % 3, "a" if i % 2 else "b") for i in range(30)],
+        "id long, blk int, f1 string",
+    ).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    sc = spark.sparkContext
+    sc.setJobGroup("fs_link_build", "build only")
+    try:
+        out = fs_link_scores(df, "blk", {"f1": 0.9}, {"f1": (1, 2)})
+        assert sc.statusTracker().getJobIdsForGroup("fs_link_build") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the single-file input is still spread before the pair join
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(_id_a" in plan, plan
+    assert out.count() > 0
+
+
 def test_fs_rejects_mismatched_fields(spark):
     from google_analytics_to_s3_spark.operators.linkage import fs_link_scores
 
